@@ -13,6 +13,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """The engine's local parallelism: ``$SPARK_GRAFT_CPUS``, default 32.
+
+    One reader for the session's ``local[N]`` master and for planners that
+    size their task count to it (the Kinesis partitioned reader packs a
+    micro-batch into at most this many input partitions)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -21,7 +30,7 @@ def get_spark(app_name: str = "kinesis_writer_spark", shuffle_partitions: int | 
     initial value); locally we match the core count to avoid tiny-task
     overhead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

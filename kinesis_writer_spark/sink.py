@@ -18,6 +18,7 @@ coordination. No driver-side collect anywhere.
 
 from __future__ import annotations
 
+import logging
 import random
 import threading
 import time
@@ -338,6 +339,7 @@ class KinesisStreamWriter:
         #: -inf so the FIRST reshard-shaped error always refreshes; the
         #: cooldown only collapses the follow-up retries of a storm
         self._last_error_refresh = float("-inf")
+        self._refresh_failure_logged = False
         midpoints = self._with_retry(lambda: open_shard_midpoints(client, stream_name))
         self.router = ShardRouter(midpoints, seed=routing_seed)
 
@@ -353,14 +355,24 @@ class KinesisStreamWriter:
         shards yield midpoints, so parents drop out as soon as they close.
         Discovery failures keep the previous map — stale routing still
         lands (children cover the parent's hash range); a hard failure
-        here would lose the batch for a recoverable condition.
+        here would lose the batch for a recoverable condition. The first
+        failure per writer logs a warning naming the exception.
         """
         try:
             self.router.update_midpoints(
                 open_shard_midpoints(self.client, self.stream_name)
             )
-        except Exception:
-            pass
+        except Exception as exc:
+            if not self._refresh_failure_logged:
+                self._refresh_failure_logged = True
+                logging.getLogger(__name__).warning(
+                    "kinesis sink: shard-map refresh of stream %r failed "
+                    "(%s: %s); keeping the previous shard map",
+                    self.stream_name,
+                    type(exc).__name__,
+                    exc,
+                    exc_info=True,
+                )
         self._flushes_since_discovery = 0
 
     def _maybe_refresh_on_error(self, exc: Exception) -> None:

@@ -48,10 +48,13 @@ Two reader shapes, same offsets (checkpoint-compatible):
   with the batch plan. Right for control-plane simplicity and low-MB/s
   streams.
 - ``.option("reader", "partitioned")``: a full ``DataSourceStreamReader``
-  planning ONE input partition per shard slice, each executor task polling
-  its own shard — ingest parallelism = shard count, no record bytes through
-  the driver. This is the cluster-scale shape; see
-  :class:`KinesisPartitionedStreamReader` for its ``latestOffset`` contract.
+  whose executor tasks replay the batch's shard slices themselves — no
+  record bytes through the driver. The slices are dealt into at most
+  ``SPARK_GRAFT_CPUS`` input partitions (default 32), each task replaying
+  its slices in turn, so a task's fixed cost is paid per core rather than
+  per shard. On a cluster, set ``SPARK_GRAFT_CPUS`` on the driver to the
+  total executor cores; see :class:`KinesisPartitionedStreamReader` for
+  that limit and its ``latestOffset`` contract.
 
 The sink side is also native: ``payloads.writeStream.format("kinesis")``
 runs the reference's producer loop (KPL aggregation → shard-midpoint
@@ -76,6 +79,8 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+
+from ..session import local_cpus
 
 #: Raw Kinesis record schema (consumer-side; ``data`` may hold a KPL
 #: aggregated record — run deaggregate_records downstream to explode it).
@@ -782,20 +787,36 @@ class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
         pass
 
 
-class _ShardSlice(InputPartition):
-    def __init__(self, shard_id: str | None, start: dict | None, end_seq: str | None):
-        self.shard_id = shard_id
-        self.start = start
-        self.end_seq = end_seq
+class _ShardSlices(InputPartition):
+    """One input partition: the ``(shard_id, start_offset, end_seq)`` slices
+    a single task replays in turn. A lone slice is a list of one; an empty
+    list is the empty batch."""
+
+    def __init__(self, slices: list[tuple[str, dict, str]]):
+        self.slices = slices
 
 
 class KinesisPartitionedStreamReader(DataSourceStreamReader):
-    """Partition-per-shard reader — the cluster-scale shape: each micro-batch
-    plans ONE input partition per shard slice, and every executor task polls
-    its own shard over the boto3 surface (``get_shard_iterator`` +
-    ``get_records``) directly, so ingest parallelism equals the shard count
-    and no record bytes are retained on the driver (unlike the Simple
-    reader, which reads driver-side).
+    """Executor-side reader: every executor task replays its shard slices
+    over the boto3 surface (``get_shard_iterator`` + ``get_records``)
+    directly, so no record bytes are retained on the driver (unlike the
+    Simple reader, which reads driver-side).
+
+    Each micro-batch deals its shard slices, in plan order, into at most
+    ``SPARK_GRAFT_CPUS`` input partitions (:func:`..session.local_cpus`,
+    default 32). A Python input partition pays a fixed cost of two Python
+    evaluations (the read, then the chained deaggregation) that dwarfs the
+    read itself at live-stream batch sizes, so 16 shards at 4 cores run as
+    4 tasks per batch, not 16. Every slice keeps its exact
+    ``(start.seq .. end_seq]`` range, so offsets and replay do not depend
+    on the packing.
+
+    The width is read on the driver, which cannot see the executors. On a
+    cluster (a session not built by ``get_spark``), set ``SPARK_GRAFT_CPUS``
+    on the driver to the total executor cores; unset, ingest is capped at
+    32 tasks, so a 200-shard stream or a retention-window backfill reads
+    about 6 shards one after another per task however many executors are
+    free.
 
     Enabled with ``.option("reader", "partitioned")``. Offsets are the same
     ``{shard_id: {"seq", "done"}}`` dicts as the Simple reader, so the two
@@ -870,6 +891,9 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             )
         self._client = None
         self._last_start: dict | None = None
+        #: whether the client's iterators expose a position; learned from
+        #: the first LATEST iterator (None until then)
+        self._indexable: bool | None = None
 
     def _c(self):
         if self._client is None:
@@ -896,14 +920,21 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # partitions()), the guard is defense against future call-order
         # drift — uncapped can never land below a checkpoint, capped could
         cap = self._max_per_batch if self._last_start is not None else 0
-        it = client.get_shard_iterator(
-            StreamName=self._stream, ShardId=sid, ShardIteratorType="LATEST"
-        )["ShardIterator"]
-        try:
-            avail = int(json.loads(it).get("idx", 0))
-        except (ValueError, TypeError, AttributeError):
-            # opaque live iterator: probe forward from the checkpoint,
-            # keeping only the last sequence number (payloads dropped)
+        if self._indexable is not False:
+            it = client.get_shard_iterator(
+                StreamName=self._stream, ShardId=sid, ShardIteratorType="LATEST"
+            )["ShardIterator"]
+            try:
+                avail = int(json.loads(it).get("idx", 0))
+                self._indexable = True
+            except (ValueError, TypeError, AttributeError):
+                # opaque (live boto3) iterators: decided once per reader, so
+                # later probes skip this LATEST call — GetShardIterator is
+                # limited to 5 calls/s per shard
+                self._indexable = False
+        if not self._indexable:
+            # probe forward from the checkpoint, keeping only the last
+            # sequence number (payloads dropped)
             _, new = _poll_shard(
                 client, self._stream, sid, cur, cap, keep_records=False
             )
@@ -956,7 +987,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         self._last_start = dict(end)
         return end
 
-    def partitions(self, start: dict, end: dict) -> list[_ShardSlice]:
+    def partitions(self, start: dict, end: dict) -> list[_ShardSlices]:
         # A restarted query re-plans its recovered batch through here
         # before any latestOffset call (measured for both committed and
         # uncommitted tails), so the recovered END is the authoritative
@@ -991,22 +1022,23 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             # the backwards-plan clamp (start past end) — plan only strictly
             # forward slices
             if eo["seq"] is not None and not _seq_ge(so.get("seq"), eo.get("seq")):
-                slices.append(_ShardSlice(sid, so, eo["seq"]))
-        # Spark requires >= 1 partition per batch; an empty slice yields no rows
-        return slices or [_ShardSlice(None, None, None)]
+                slices.append((sid, so, eo["seq"]))
+        # deal the slices out in plan order; Spark requires >= 1 partition
+        # per batch, and an empty list yields no rows
+        width = max(1, min(local_cpus(), len(slices)))
+        return [_ShardSlices(slices[i::width]) for i in range(width)]
 
-    def read(self, partition: _ShardSlice) -> Iterator[tuple]:
-        # executor-side: this task owns one shard slice and opens its own
-        # AFTER_SEQUENCE_NUMBER iterator — no record bytes via the driver
-        if partition.shard_id is None or partition.end_seq is None:
+    def read(self, partition: _ShardSlices) -> Iterator[tuple]:
+        # executor-side: this task replays its slices one after another,
+        # each from its own AFTER_SEQUENCE_NUMBER iterator over one client
+        # — no record bytes via the driver
+        if not partition.slices:
             return
         client = resolve_factory(self._factory_spec, self._factory_kwargs)
-        yield from _rows_for(
-            partition.shard_id,
-            _read_shard_range(
-                client, self._stream, partition.shard_id, partition.start, partition.end_seq
-            ),
-        )
+        for sid, start, end_seq in partition.slices:
+            yield from _rows_for(
+                sid, _read_shard_range(client, self._stream, sid, start, end_seq)
+            )
 
     def commit(self, end: dict) -> None:
         pass
@@ -1014,10 +1046,11 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
 
 class KinesisBatchReader(DataSourceReader):
     """Batch read for backfills: ``spark.read.format("kinesis")`` scans every
-    shard from TRIM_HORIZON to the current tip, one input partition per
-    shard — the bulk-load twin of the streaming readers (same client
-    contract, same record schema), for rebuilding a table from a stream
-    retention window or a capture directory without running a query.
+    shard from TRIM_HORIZON to the current tip, its shard slices packed into
+    input partitions as a micro-batch's are — the bulk-load twin of the
+    streaming readers (same client contract, same record schema), for
+    rebuilding a table from a stream retention window or a capture directory
+    without running a query.
     ``latestOffset``'s parent-first multi-pass means a fully-resharded
     stream backfills in one shot (parents and children in the same scan)."""
 
@@ -1197,7 +1230,7 @@ class KinesisStreamSinkWriter(DataSourceStreamWriter):
             route_by_budget=self._route_by_budget,
             refresh_every_flushes=self._refresh_flushes,
         )
-        n = writer.write(bytes(row["data"]) for row in iterator)
+        writer.write(bytes(row["data"]) for row in iterator)
         return WriterCommitMessage()
 
     def commit(self, messages, batchId) -> None:

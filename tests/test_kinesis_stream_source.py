@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +39,19 @@ def _make_capture(tmp_path, shards: dict[str, list[bytes]]) -> str:
     return str(root)
 
 
+def _framed_capture(root, shards: dict[str, list[bytes]]) -> str:
+    """One KPL frame (one sequence position) per payload."""
+    for shard_id, payloads in shards.items():
+        wires = []
+        for p in payloads:
+            agg = RecordAggregator()
+            agg.add_user_record("pk", p)
+            wires.append(agg.clear_and_get().to_bytes())
+        os.makedirs(root / shard_id)
+        write_wire_file(str(root / shard_id / "part-0.kpl"), wires)
+    return str(root)
+
+
 def _payloads(shard: int, n: int) -> list[bytes]:
     return [
         json.dumps(
@@ -48,6 +62,11 @@ def _payloads(shard: int, n: int) -> list[bytes]:
         ).encode()
         for i in range(n)
     ]
+
+
+def _planned_shards(parts) -> list[str]:
+    """Shard id of every slice planned across ``parts`` (one entry per slice)."""
+    return [sid for p in parts for sid, _, _ in p.slices]
 
 
 @pytest.fixture()
@@ -264,9 +283,9 @@ class TestKinesisStreamSink:
 
 
 class TestPartitionedReader:
-    """option('reader','partitioned'): one input partition per shard slice,
-    executor-side polling — the cluster-scale upgrade path, checkpoint-
-    compatible with the Simple reader."""
+    """option('reader','partitioned'): shard slices packed into input
+    partitions, executor-side polling — the cluster-scale upgrade path,
+    checkpoint-compatible with the Simple reader."""
 
     def test_partition_planning(self, capture_dir):
         from kinesis_writer_spark.sources.kinesis_stream import (
@@ -284,8 +303,8 @@ class TestPartitionedReader:
         assert set(start) == set(end)
         assert all(e["seq"] is not None for e in end.values())
         parts = r.partitions(start, end)
-        assert len(parts) == 2  # one per shard
-        rows = list(r.read(parts[0])) + list(r.read(parts[1]))
+        assert sorted(_planned_shards(parts)) == sorted(end)  # one slice per shard
+        rows = [t for p in parts for t in r.read(p)]
         # frames (aggregated records) per shard, not user records; capture
         # sequence numbers are dense, so last seq + 1 == frame count
         assert len(rows) == sum(int(e["seq"]) + 1 for e in end.values())
@@ -350,6 +369,158 @@ class TestPartitionedReader:
         assert all(e["seq"] == "2" for e in e4.values())  # and never goes past
 
 
+class _CountingClient:
+    """Wraps a capture client and counts GetShardIterator calls by type."""
+
+    def __init__(self, inner):
+        self._inner = inner
+        self.iterator_calls: Counter = Counter()
+
+    def get_shard_iterator(self, **kw):
+        self.iterator_calls[kw["ShardIteratorType"]] += 1
+        return self._inner.get_shard_iterator(**kw)
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+
+class TestShardPacking:
+    """A batch's shard slices pack into at most SPARK_GRAFT_CPUS input
+    partitions: 16 shards at width 4 plan 4 partitions of 4 slices, each
+    slice exactly once, replaying the same rows."""
+
+    WIDTH = 4
+    #: frames per shard (uneven, so a capped batch leaves some shards behind)
+    COUNTS = [8, 1, 2, 1] * 4
+    SHARDS = [f"shardId-{i:012d}" for i in range(16)]
+
+    @pytest.fixture(scope="class")
+    def capture16(self, tmp_path_factory):
+        root = tmp_path_factory.mktemp("capture16")
+        return _framed_capture(
+            root, {sid: _payloads(i, n) for i, (sid, n) in enumerate(zip(self.SHARDS, self.COUNTS))}
+        )
+
+    @pytest.fixture()
+    def width(self, monkeypatch):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", str(self.WIDTH))
+
+    def _opts(self, capture, opaque, **extra):
+        return {
+            "stream_name": "events",
+            "client_factory": "kinesis_writer_spark.sources.kinesis_stream:capture_client_factory",
+            "client_kwargs": json.dumps({"capture_dir": capture, "opaque": opaque}),
+            **extra,
+        }
+
+    def _rows_by_shard(self, r, parts) -> dict[str, list[str]]:
+        out: dict[str, list[str]] = {}
+        for p in parts:
+            for t in r.read(p):
+                out.setdefault(t[0], []).append(t[1])
+        return out
+
+    def _expected_rows(self) -> dict[str, list[str]]:
+        return {sid: [str(k) for k in range(n)] for sid, n in zip(self.SHARDS, self.COUNTS)}
+
+    @pytest.mark.parametrize("opaque", [False, True])
+    def test_plans_width_partitions(self, capture16, width, opaque):
+        r = kinesis_stream.KinesisPartitionedStreamReader(self._opts(capture16, opaque))
+        start, end = r.initialOffset(), r.latestOffset()
+        parts = r.partitions(start, end)
+        assert [len(p.slices) for p in parts] == [4] * self.WIDTH
+        assert sorted(_planned_shards(parts)) == self.SHARDS  # each slice once
+        assert self._rows_by_shard(r, parts) == self._expected_rows()
+
+    @pytest.mark.parametrize("opaque", [False, True])
+    def test_restart_plans_every_slice(self, capture16, width, opaque):
+        first = kinesis_stream.KinesisPartitionedStreamReader(self._opts(capture16, opaque))
+        start, end = first.initialOffset(), first.latestOffset()
+        # a restarted query re-plans its recovered batch before any
+        # latestOffset()
+        r = kinesis_stream.KinesisPartitionedStreamReader(self._opts(capture16, opaque))
+        parts = r.partitions(start, end)
+        assert [len(p.slices) for p in parts] == [4] * self.WIDTH
+        assert sorted(_planned_shards(parts)) == self.SHARDS
+        assert self._rows_by_shard(r, parts) == self._expected_rows()
+
+    @pytest.mark.parametrize("opaque", [False, True])
+    def test_probe_opens_latest_iterators_only_when_indexable(self, capture16, opaque):
+        r = kinesis_stream.KinesisPartitionedStreamReader(self._opts(capture16, opaque))
+        r._client = client = _CountingClient(
+            kinesis_stream.capture_client_factory(capture16, opaque=opaque)
+        )
+        r.initialOffset()
+        for _ in range(3):
+            r.latestOffset()
+        if opaque:
+            # one LATEST call decides the client is opaque; from then on
+            # each probe opens only its resume iterator per shard
+            assert client.iterator_calls["LATEST"] == 1
+            assert sum(client.iterator_calls.values()) == 1 + 3 * 16
+        else:
+            assert client.iterator_calls == Counter({"LATEST": 3 * 16})
+
+    def test_streaming_exactly_once(self, spark, capture16, tmp_path):
+        kinesis_stream.register(spark)
+        raw = (
+            spark.readStream.format("kinesis")
+            .option("reader", "partitioned")
+            .options(**self._opts(capture16, True))
+            .load()
+        )
+        q = (
+            deaggregate_records(raw, wire_col="data", strict=False)
+            .writeStream.format("memory")
+            .queryName("kinesis_packed16")
+            .option("checkpointLocation", str(tmp_path / "ckpt_packed"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        got = spark.sql("SELECT * FROM kinesis_packed16").collect()
+        users = sorted(json.loads(bytes(r["data"]))["user_id"] for r in got)
+        assert users == sorted(i * 1000 + k for i, n in enumerate(self.COUNTS) for k in range(n))
+
+    def test_scan_stage_runs_width_tasks(self, spark, capture16, tmp_path):
+        """Timing-free guard: two capped micro-batches of the 16-shard
+        stream; each batch's scan stage ran one task per core, not one per
+        shard. The planner runs in a Python worker that inherits the JVM's
+        environment, so the width is the session's, not monkeypatched."""
+        from kinesis_writer_spark.session import local_cpus
+
+        width = local_cpus()
+        if width >= 16:
+            pytest.skip(f"width {width} >= 16 shards: one partition per slice would pass too")
+        kinesis_stream.register(spark)
+        raw = (
+            spark.readStream.format("kinesis")
+            .option("reader", "partitioned")
+            .options(**self._opts(capture16, False, max_records_per_batch="4"))
+            .load()
+        )
+        q = (
+            raw.writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt_guard"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        # cap 4: the 8-frame shards need two batches, every other shard one
+        assert [p["numInputRows"] for p in data_batches] == [4 * 4 + 4 * (1 + 2 + 1), 4 * 4]
+        st = spark.sparkContext.statusTracker()
+        stage_ids = sorted(
+            sid
+            for jid in st.getJobIdsForGroup(str(q.runId))
+            for sid in st.getJobInfo(jid).stageIds
+        )
+        # 16 slices, then the four 8-frame shards' second slices
+        assert [st.getStageInfo(sid).numTasks for sid in stage_ids] == [width, min(4, width)]
+
+
 class TestOpaqueSequenceNumbers:
     """Real boto3 shard iterators are opaque strings and sequence numbers
     admit no arithmetic. With ``opaque=True`` the capture client hides its
@@ -373,8 +544,8 @@ class TestOpaqueSequenceNumbers:
         r = KinesisPartitionedStreamReader(self._opts(capture_dir))
         start, end = r.initialOffset(), r.latestOffset()
         parts = r.partitions(start, end)
-        assert len(parts) == 2
-        rows = list(r.read(parts[0])) + list(r.read(parts[1]))
+        assert sorted(_planned_shards(parts)) == sorted(end)
+        rows = [t for p in parts for t in r.read(p)]
         # the probe pinned each shard's true tip; executors replayed to it
         by_shard: dict[str, list] = {}
         for t in rows:
@@ -384,7 +555,7 @@ class TestOpaqueSequenceNumbers:
         # a second planning call from the same position adds nothing
         e2 = r.latestOffset()
         assert all(e2[s]["seq"] == end[s]["seq"] for s in e2)
-        assert r.partitions(end, e2) and r.partitions(end, e2)[0].shard_id is None
+        assert [p.slices for p in r.partitions(end, e2)] == [[]]  # the empty plan
 
     def test_opaque_checkpoint_resume_exactly_once(self, spark, capture_dir, tmp_path):
         ckpt = str(tmp_path / "ckpt_opq")
@@ -495,13 +666,13 @@ class TestResharding:
         # parent hit SHARD_END during the probe and is marked done
         assert end[self.PARENT]["done"] is True
         parts = r.partitions(start, end)
-        assert {p.shard_id for p in parts} == {self.PARENT, self.CHILD_A, self.CHILD_B}
+        assert set(_planned_shards(parts)) == {self.PARENT, self.CHILD_A, self.CHILD_B}
         rows = [t for p in parts for t in r.read(p)]
         assert len(rows) == 10 + 7 + 5  # no loss, no duplication
         # next planning call: parent stays done and plans NO further slices
         e2 = r.latestOffset()
         assert e2[self.PARENT]["done"] is True
-        assert all(p.shard_id != self.PARENT for p in r.partitions(end, e2))
+        assert self.PARENT not in _planned_shards(r.partitions(end, e2))
 
     def test_children_wait_for_capped_parent(self, reshard_capture):
         from kinesis_writer_spark.sources.kinesis_stream import (
@@ -1344,7 +1515,7 @@ class TestBackwardsPlanClamp:
         # a horizon-floored cap produced an earlier end
         behind = {sid: {"seq": "0", "done": False} for sid in end}
         parts = r.partitions(end, behind)
-        assert len(parts) == 1 and parts[0].shard_id is None  # empty batch
+        assert [p.slices for p in parts] == [[]]  # empty batch
 
     def test_taught_floor_never_regresses(self, capture_dir):
         r = self._reader(capture_dir)
@@ -1364,6 +1535,6 @@ class TestBackwardsPlanClamp:
         r = self._reader(capture_dir)
         start, end = r.initialOffset(), r.latestOffset()
         parts = r.partitions(start, end)
-        assert len(parts) == 2
+        assert sorted(_planned_shards(parts)) == sorted(end)
         rows = [t for p in parts for t in r.read(p)]
         assert len(rows) == sum(int(e["seq"]) + 1 for e in end.values())

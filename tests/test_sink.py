@@ -4,6 +4,7 @@ flush-branch coverage, retry schedule, replay re-encoding, count preservation.
 
 from __future__ import annotations
 
+import logging
 import random
 
 import pytest
@@ -213,6 +214,28 @@ class TestReshardRefresh:
         writer.refresh_shard_map()  # must not raise, must not clear the map
         assert writer.router.midpoints == before
         client.describe_stream = orig
+
+    def test_discovery_failure_warns_once_per_writer(self, caplog):
+        class FailsAfterFirst(FakeKinesisClient):
+            def __init__(self):
+                super().__init__(num_shards=1)  # one describe page
+                self.calls = 0
+
+            def describe_stream(self, *a, **kw):
+                self.calls += 1
+                if self.calls > 1:
+                    raise RuntimeError("LimitExceededException: describe down")
+                return super().describe_stream(*a, **kw)
+
+        writer = KinesisStreamWriter("s", FailsAfterFirst(), sleep=self._no_sleep)
+        before = writer.router.midpoints
+        with caplog.at_level(logging.WARNING, logger="kinesis_writer_spark.sink"):
+            writer.refresh_shard_map()
+            writer.refresh_shard_map()
+        assert writer.router.midpoints == before  # previous map kept
+        warnings = [r.getMessage() for r in caplog.records]
+        assert len(warnings) == 1
+        assert "RuntimeError" in warnings[0] and "describe down" in warnings[0]
 
 
 class TestRefreshHygiene:
